@@ -172,9 +172,11 @@ object Ann {
     // projection (sample-gate filter, u16→double transform) every
     // round; unpersisted before returning (an in-call intermediate,
     // not a cross-query cache). Bit-identical math — only the input's
-    // physical source changes.
-    val vecs = vecs0.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // physical source changes. A frame the caller already cached is
+    // read as is and left cached: its cache is the caller's to drop.
+    val owned = vecs0.storageLevel == org.apache.spark.storage.StorageLevel.NONE
+    val vecs = if (owned) vecs0.persist(
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) else vecs0
     try {
     // seed = the FIRST nLists vectors in id order (TakeOrdered — no
     // assumption that ids start at 0 or are dense; a filter(id <
@@ -200,7 +202,7 @@ object Ann {
       cents = next
     }
     new graft.expressions.PlaneMatrix(cents, dim)
-    } finally vecs.unpersist(false)
+    } finally if (owned) vecs.unpersist(false)
   }
 
   /** s3: IVF-flat ANN (*rows-only oracle*; recall spec'd in tests).

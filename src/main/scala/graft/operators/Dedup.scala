@@ -384,13 +384,12 @@ object Dedup {
 
   /** d6: near-dup GROUPS and the keep/drop list — the step an actual
     * dedup pipeline ends with. Connected components over d3's
-    * verified pair evidence via iterative min-label propagation
-    * (every node takes the min label among itself and its neighbors;
-    * repeat to fixpoint — O(component diameter) iterations, each one
-    * shuffle-bounded join, the standard big-graph CC shape; the
-    * per-iteration convergence count is a scalar driver check like
-    * k-means'). Output: one row per doc in a dup group, its
-    * component-min keep_doc and the group size.
+    * verified pair evidence ([[ccGroups]]): a partition-local
+    * union-find contracts every component that fits one partition in
+    * a single task, and a min-label propagation loop merges only the
+    * components that span partitions (one checkpoint job per round,
+    * convergence observed inside it). Output: one row per doc in a
+    * dup group, its component-min keep_doc and the group size.
     */
   def d6DedupGroups(t: Tables, threshold: Double = 0.5): DataFrame =
     ccLabelsStaged(t, threshold)
@@ -402,14 +401,13 @@ object Dedup {
       .select("doc_a", "doc_b"), sorted)
 
   /** Corpus-keyed CC-label registry: the dedup pipeline's most
-    * expensive artifact (minhash → bands → verify → iterative CC, a
-    * driver-synced job per iteration) is computed ONCE per (corpus,
-    * threshold) and landed as parquet, like s3/s5's trained models
-    * (Ann.codebooks) — every consumer (d6's groups query, d10's
-    * leakage-safe split) then reads a component-sized scan instead of
-    * re-running the pipeline. Same lake-snapshot contract as every
-    * staged cache: the corpus under `t.dir` is immutable for the
-    * JVM's lifetime.
+    * expensive artifact (minhash → bands → verify → CC) is computed
+    * ONCE per (corpus, threshold) and landed as parquet, like s3/s5's
+    * trained models (Ann.codebooks) — every consumer (d6's groups
+    * query, d10's leakage-safe split) then reads a component-sized
+    * scan instead of re-running the pipeline. Same lake-snapshot
+    * contract as every staged cache: the corpus under `t.dir` is
+    * immutable for the JVM's lifetime.
     */
   private[graft] def ccLabelsStaged(t: Tables,
       threshold: Double): DataFrame = {
@@ -518,15 +516,11 @@ object Dedup {
     if (sorted) out.orderBy("doc_id") else out
   }
 
-  /** Connected components over an undirected pair frame (doc_a,
-    * doc_b) — the CC engine behind d6, exposed at the pairs level so
-    * any near-dup family's evidence (d2/d3/d4/d5) can be grouped and
-    * so the iteration logic is testable on adversarial graph shapes
-    * (long chains) without going through minhash.
-    */
-  /** Shuffle-round count of the LAST [[ccGroups]] run — probe/spec
-    * instrumentation for the O(log diameter) convergence claim (the
-    * deep-chain measurement SURVEY §5 records).
+  /** Label-loop round count of the LAST [[ccGroups]] run — trace
+    * and spec instrumentation. It is 0 when the pairs fit one
+    * contraction partition (the union-find alone resolves every
+    * component); otherwise the rounds merge components that span
+    * partitions, the last one confirming the fixpoint.
     */
   private[graft] val lastCcRounds =
     new java.util.concurrent.atomic.AtomicInteger(0)
@@ -546,62 +540,161 @@ object Dedup {
       case _ => ()
     }
 
+  /** Partition count for local contraction: the materialized pairs'
+    * MEASURED in-memory bytes over the session's AQE advisory
+    * partition size, so each union-find task holds about one
+    * advisory partition. Explicit, because AQE does not coalesce the
+    * exchange of a plan that is cached or checkpointed.
+    */
+  private def contractionParts(pairs: DataFrame): Int = {
+    val bytes = pairs.select(col("doc_a"), col("doc_b"))
+      .queryExecution.optimizedPlan.stats.sizeInBytes
+    val advisory = BigInt(math.max(1L,
+      org.apache.spark.sql.GraftPlanBridge.advisoryPartitionBytes(
+        pairs.sparkSession)))
+    ((bytes + advisory - 1) / advisory).max(1).min(Int.MaxValue).toInt
+  }
+
+  /** Union-find over one partition's pairs, path halving, the root
+    * kept at the component's least id. Emits one (node, root) star
+    * edge per node seen here, the root's self-edge included, so the
+    * stars of every partition together connect exactly what the pairs
+    * connect. Ids are integral, decimal or string values; the root is
+    * the least id of the partition's component in Spark's ordering.
+    * A pair with a null end joins nothing and is skipped.
+    */
+  private def localStars(pairs: Iterator[org.apache.spark.sql.Row])
+      : Iterator[org.apache.spark.sql.Row] = {
+    val parent = new java.util.HashMap[AnyRef, AnyRef]()
+    def find(x: AnyRef): AnyRef = {
+      var v = x
+      var p = parent.get(v)
+      while (p != v) {
+        val gp = parent.get(p)
+        parent.put(v, gp)
+        v = gp
+        p = parent.get(v)
+      }
+      v
+    }
+    // strings compare as Spark orders them (UTF-8 bytes), so a root
+    // is the least id in Spark's own ordering
+    def less(a: AnyRef, b: AnyRef): Boolean = (a, b) match {
+      case (x: String, y: String) =>
+        org.apache.spark.unsafe.types.UTF8String.fromString(x)
+          .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(y)) < 0
+      case _ => a.asInstanceOf[Comparable[AnyRef]].compareTo(b) < 0
+    }
+    pairs.foreach { r =>
+      val a = r.get(0).asInstanceOf[AnyRef]
+      val b = r.get(1).asInstanceOf[AnyRef]
+      if (a != null && b != null) {
+        parent.putIfAbsent(a, a)
+        parent.putIfAbsent(b, b)
+        val ra = find(a); val rb = find(b)
+        if (ra != rb) {
+          if (less(ra, rb)) parent.put(rb, ra) else parent.put(ra, rb)
+        }
+      }
+    }
+    val nodes = parent.keySet().toArray
+    nodes.iterator.map(n => org.apache.spark.sql.Row(n, find(n)))
+  }
+
+  /** Connected components over an undirected pair frame (doc_a,
+    * doc_b) — the CC engine behind d6/d10/d13 and st13's compaction,
+    * exposed at the pairs level so any near-dup family's evidence
+    * (d2/d3/d4/d5) can be grouped and so the loop is testable on
+    * adversarial graph shapes (long chains) without going through
+    * minhash. Output (doc_id, keep_doc, group_size): one row per node,
+    * keep_doc the component's least id, ids in the input's type.
+    *
+    * Three steps:
+    *  1. the pairs are materialized ONCE (their upstream plan —
+    *     minhash → verify — runs once, not once per direction);
+    *  2. LOCAL CONTRACTION: the pairs are hash-partitioned by doc_a
+    *     into [[contractionParts]] partitions and a per-partition
+    *     union-find ([[localStars]]) replaces each partition's edges
+    *     by node → local-root star edges. Stars keep connectivity
+    *     exactly, and every node's first label is its least root;
+    *  3. the LABEL LOOP: min-label propagation plus pointer jumping
+    *     over the stars, which only moves labels of components that
+    *     span partitions. Each round is ONE action — its changed-label
+    *     count and row count are observed inside the checkpoint job
+    *     (`Dataset.observe`) — and a round that changes nothing is the
+    *     fixpoint. With one partition the seed is already final and
+    *     the loop does not run.
+    */
   private[graft] def ccGroups(pairs: DataFrame,
       sorted: Boolean = true): DataFrame = {
     lastCcRounds.set(0)
-    val edges = graft.Caches.materialized(
-      pairs.union(pairs.select(col("doc_b").as("doc_a"),
-        col("doc_a").as("doc_b"))))
+    val verified = graft.Caches.materialized(pairs.select("doc_a", "doc_b"))
+    val idType = verified.schema("doc_a").dataType
+    val starSchema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("node", idType),
+      org.apache.spark.sql.types.StructField("root", idType)))
+    val parts = contractionParts(verified)
+    // ONE partition: its union-find saw every pair, so each root IS its
+    // component's least id, the seed is final and no loop runs. Stars
+    // are read once then, so only the loop's input is materialized
+    val contracted = verified.repartition(parts, col("doc_a"))
+      .mapPartitions(localStars _)(
+        org.apache.spark.sql.Encoders.row(starSchema))
+    val stars = if (parts == 1) contracted else {
+      val m = graft.Caches.materialized(contracted)
+      graft.Caches.drop(verified)
+      m
+    }
+    val edges = stars.select(col("node").as("doc_a"), col("root").as("doc_b"))
+      .union(stars.select(col("root").as("doc_a"), col("node").as("doc_b")))
+    // a node's seed is its least root (never above the node itself);
+    // it stays lazy: round 1 (or the final write) computes it
+    var labels = stars.groupBy(col("node").as("doc_id"))
+      .agg(min(col("root")).as("label"))
     // each round LOCAL-CHECKPOINTS its labels: an iterative frame's
     // lineage otherwise nests one whole plan per round, and on a
-    // deep-chain graph (log₂(diameter) rounds) the accumulated tree
-    // is exponential — the 100× chain probe OOM'd the DRIVER merely
-    // STRINGIFYING the plan before the cached data was ever large.
+    // deep-chain graph the accumulated tree is exponential — the 100×
+    // chain probe OOM'd the DRIVER merely STRINGIFYING the plan.
     // Truncation caps every round at a flat scan + two joins, the
     // standard posture for distributed iterative algorithms
     // (GraphX/GraphFrames checkpoint their iteration for the same
     // reason). Blocks of superseded rounds are freed eagerly.
-    var labels = edges.select(col("doc_a").as("doc_id")).distinct()
-      .withColumn("label", col("doc_id"))
-      .localCheckpoint()
-    // coalesce: a dup-free corpus has no edges, and sum over an empty
-    // frame is null
-    def labelSum(df: DataFrame): Long =
-      df.agg(coalesce(sum(col("label")), lit(0L))).collect()(0).getLong(0)
-    var prevSum = labelSum(labels)
-    var converged = false
-    while (!converged) {
+    var changed = if (parts == 1) 0L else 1L
+    while (changed > 0) {
       lastCcRounds.incrementAndGet()
       val nbrMin = edges
         .join(labels.withColumnRenamed("doc_id", "doc_b"), "doc_b")
         .groupBy(col("doc_a").as("doc_id"))
         .agg(min(col("label")).as("nbr_min"))
       val hop = labels.join(nbrMin, Seq("doc_id"), "left")
-        .select(col("doc_id"),
+        .select(col("doc_id"), col("label").as("l0"),
           least(col("label"), coalesce(col("nbr_min"), col("label")))
             .as("label"))
       // pointer-jump shortcut (L(v) := min(L(v), L_prev(L(v)))): every
-      // label value is itself a node id, so chasing one link halves
-      // the remaining distance to the component root — convergence in
-      // O(log diameter) joins instead of O(diameter), the difference
-      // between 4 and 40 shuffle rounds on a long dup chain
+      // label value is itself a node id, so chasing one link shortens
+      // the remaining walk to the component root
+      val round = org.apache.spark.sql.Observation()
       val next = hop.join(
           labels.select(col("doc_id").as("label"), col("label").as("ll")),
           Seq("label"), "left")
-        .select(col("doc_id"),
-          least(col("label"), coalesce(col("ll"), col("label")))
-            .as("label"))
-        .localCheckpoint() // eager: materializes the round, cuts lineage
-      // labels are monotonically non-increasing, so an unchanged sum
-      // IS the fixpoint
-      val s = labelSum(next)
-      converged = s == prevSum
-      prevSum = s
+        .select(col("doc_id"), col("l0"),
+          least(col("label"), coalesce(col("ll"), col("label"))).as("label"))
+        .observe(round, count(lit(1)).as("rows"),
+          coalesce(sum(when(col("label") =!= col("l0"), 1L)), lit(0L))
+            .as("changed"))
+        .select("doc_id", "label")
+        .localCheckpoint() // eager: the round's one job, cuts lineage
+      val m = round.get
+      changed = m("changed").asInstanceOf[Long]
       // superseded rounds are freed NOW: storage stays bounded by one
-      // iteration's working set instead of growing with log(diameter)
+      // iteration's working set instead of growing with round count
       releaseCheckpoint(labels)
-      labels = next
+      // re-planned with its measured size, not the compounding
+      // estimate the checkpoint carries over from the round's joins
+      labels = org.apache.spark.sql.GraftPlanBridge.withMeasuredStats(
+        next, m("rows").asInstanceOf[Long])
     }
+    if (parts > 1) graft.Caches.drop(stars)
     // the CONVERGED round's checkpoint blocks must not outlive the
     // operator (checkpoint RDDs sit outside the SQL cache, so neither
     // Caches.fresh() nor catalog.clearCache() would ever reclaim

@@ -481,12 +481,15 @@ object TextAnalysis {
     val vocabT = {
       import scala.concurrent.Future
       import scala.concurrent.ExecutionContext.Implicits.global
-      Future(scala.util.Try(docsIn
+      Future(scala.util.Try(Pipeline.labeled(docsIn.sparkSession,
+          "t13: vocabulary scan")(docsIn
         .select(explode(Text.tokenize(col(textCol))).as("term"))
         .agg(countDistinct("term").as("v"))
-        .collect()(0).getLong(0)))
+        .collect()(0).getLong(0))))
     }
-    val docsBg = graft.Caches.materialized(
+    // the vocabulary job is settled before any exception leaves: a
+    // failed bigram stream must not return with the scan still running
+    val docsBg = try graft.Caches.materialized(
       docsIn
         .select(col(idCol).as("doc_id"), Text.tokenize(col(textCol)).as("tk"))
         .filter(size(col("tk")) >= 2)
@@ -494,6 +497,11 @@ object TextAnalysis {
           explode(transform(sequence(lit(0), size(col("tk")) - 2),
             i => concat_ws(" ", slice(col("tk"), i + 1, lit(2))))).as("bg"))
         .repartition(col("bg")))
+    catch { case e: Throwable =>
+      scala.concurrent.Await.ready(vocabT,
+        scala.concurrent.duration.Duration.Inf)
+      throw e
+    }
     val stats = docsBg.groupBy("bg").agg(count(lit(1)).as("c_bi"))
       .withColumn("w1", element_at(split(col("bg"), " "), 1))
     val ctx = stats.groupBy("w1").agg(sum("c_bi").as("c_w1"))

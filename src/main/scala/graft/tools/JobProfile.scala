@@ -20,6 +20,7 @@ object JobProfile {
     case class J(id: Int, desc: String, t0: Long,
       var t1: Long = 0L, var nTasks: Int = 0, var taskMs: Long = 0L)
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, J]()
+    val jobOfStage = new java.util.concurrent.ConcurrentHashMap[Int, J]()
     val order = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
@@ -28,21 +29,24 @@ object JobProfile {
           .orElse(Option(e.properties)
             .flatMap(p => Option(p.getProperty("callSite.short"))))
           .getOrElse("")
-        jobs.put(e.jobId, J(e.jobId, d, e.time))
+        val j = J(e.jobId, d, e.time)
+        jobs.put(e.jobId, j)
+        e.stageIds.foreach(jobOfStage.put(_, j))
         order.add(e.jobId)
       }
       override def onJobEnd(e: SparkListenerJobEnd): Unit = {
         val j = jobs.get(e.jobId); if (j != null) j.t1 = e.time
       }
+      // listener events arrive on one bus thread, so the per-job
+      // counters need no further synchronization
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-        val j = jobs.get(e.stageId); ()
+        val j = jobOfStage.get(e.stageId)
+        if (j != null) { j.nTasks += 1; j.taskMs += e.taskInfo.duration }
       }
-      override def onStageCompleted(
-          e: SparkListenerStageCompleted): Unit = ()
     }
     spark.sparkContext.addSparkListener(listener)
     names.split(',').foreach { name =>
-      jobs.clear(); order.clear()
+      jobs.clear(); jobOfStage.clear(); order.clear()
       val w0 = System.nanoTime()
       val n = graft.SparkEntry.queries(name)(spark, sfDir).count()
       val wall = (System.nanoTime() - w0) / 1e9
@@ -52,15 +56,20 @@ object JobProfile {
       println(f"%n== $name: $n rows, wall $wall%.2f s ==")
       import scala.jdk.CollectionConverters._
       var sum = 0.0
+      var tasks = 0L
+      var taskS = 0.0
       for (id <- order.asScala) {
         val j = jobs.get(id)
         val dt = if (j.t1 > 0) (j.t1 - j.t0) / 1e3 else -1.0
         if (dt >= 0) sum += dt
-        val d = if (j.desc.length > 90) j.desc.take(90) else j.desc
-        println(f"  job ${j.id}%4d  $dt%7.3f s  $d")
+        tasks += j.nTasks; taskS += j.taskMs / 1e3
+        val d = if (j.desc.length > 80) j.desc.take(80) else j.desc
+        println(f"  job ${j.id}%4d  $dt%7.3f s  ${j.nTasks}%4d tasks " +
+          f"${j.taskMs / 1e3}%7.3f task-s  $d")
       }
       println(f"  -- jobs $sum%.2f s of wall $wall%.2f s " +
-        f"(driver/gaps ${wall - sum}%.2f s, ${jobs.size} jobs)")
+        f"(driver/gaps ${wall - sum}%.2f s, ${jobs.size} jobs, " +
+        f"$tasks tasks, $taskS%.2f task-s)")
     }
     spark.stop()
   }

@@ -181,7 +181,8 @@ object Probe {
       // the CC registry under the ADVERSARIAL graph: one deep chain
       // of `copies`·5k nodes (diameter = corpus size — the worst
       // component shape a dedup corpus can produce) plus the measured
-      // pointer-jump round count, pinning the O(log diameter) claim
+      // label-loop round count (1 while the chain's pairs fit one
+      // contraction partition)
       case "ccchain" =>
         def chain(n: Long) = {
           graft.Caches.fresh()

@@ -131,6 +131,171 @@ class DedupTextSpec extends SparkSpec {
     assert(got == want)
   }
 
+  /** (doc_id, keep_doc, group_size) per node by a driver-side
+    * union-find — the reference the Spark CC path must reproduce. */
+  private def driverCc(edges: Seq[(Long, Long)]): Set[(Long, Long, Long)] = {
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long =
+      if (parent(x) == x) x else { val r = find(parent(x)); parent(x) = r; r }
+    edges.foreach { case (a, b) =>
+      parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    val nodes = parent.keys.toSeq
+    val size = nodes.groupBy(find).view.mapValues(_.size.toLong).toMap
+    nodes.map(n => (n, find(n), size(find(n)))).toSet
+  }
+
+  /** Runs `f` with the AQE advisory partition size set to `bytes`
+    * (None: the session's own), restoring the previous setting. */
+  private def withAdvisory[T](bytes: Option[String])(f: => T): T = {
+    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val old = spark.conf.getOption(key)
+    bytes.foreach(spark.conf.set(key, _))
+    try f finally old match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  /** A path over n nodes whose ids are the chain positions scaled by
+    * a unit mod n, so neighbouring ids are far apart on the chain. */
+  private def permutedChain(n: Int, mult: Long = 7919L): Seq[(Long, Long)] =
+    (0 until n - 1).map { i =>
+      val a = (i * mult) % n; val b = ((i + 1) * mult) % n
+      (math.min(a, b), math.max(a, b))
+    }
+
+  /** ccGroups over `edges` with ids as Int, Long or fixed-width
+    * String (whose order is the numeric one), read back as Longs. */
+  private def ccRows(edges: Seq[(Long, Long)], idType: String)
+      : Set[(Long, Long, Long)] = {
+    import SparkSpec.spark.implicits._
+    def str(x: Long) = f"d$x%012d"
+    def num(x: Any): Long = x match {
+      case s: String => s.drop(1).toLong
+      case n: Number => n.longValue
+    }
+    val pairs = idType match {
+      case "int" => edges.map { case (a, b) => (a.toInt, b.toInt) }.toDF("doc_a", "doc_b")
+      case "long" => edges.toDF("doc_a", "doc_b")
+      case "string" => edges.map { case (a, b) => (str(a), str(b)) }.toDF("doc_a", "doc_b")
+    }
+    graft.operators.Dedup.ccGroups(pairs).collect()
+      .map(r => (num(r.getAs[Any]("doc_id")), num(r.getAs[Any]("keep_doc")),
+        r.getAs[Long]("group_size"))).toSet
+  }
+
+  test("cc property: random graphs match a driver union-find, with one contraction partition and with many") {
+    import org.scalacheck.{Gen, Prop, Test}
+    import org.scalacheck.rng.Seed
+    // permuted chains, stars, disjoint pairs and unions of them, over
+    // Int ids, Long ids past the Int range, or String ids
+    val shape: Gen[Seq[(Long, Long)]] = Gen.oneOf(
+      for (n <- Gen.choose(2, 40); m <- Gen.oneOf(7L, 13L, 7919L))
+        yield permutedChain(n, if (n % m == 0) 1L else m),
+      for (n <- Gen.choose(2, 30); hub <- Gen.choose(0, n - 1))
+        yield (0 until n).filter(_ != hub).map(i =>
+          (math.min(i, hub).toLong, math.max(i, hub).toLong)),
+      for (n <- Gen.choose(1, 20)) yield (0 until n).map(i =>
+        ((2 * i).toLong, (2 * i + 1).toLong)))
+    val graph: Gen[(Seq[(Long, Long)], String)] = for {
+      k <- Gen.choose(1, 3)
+      parts <- Gen.listOfN(k, shape)
+      idType <- Gen.oneOf("int", "long", "string")
+    } yield {
+      // disjoint id ranges per part; Long graphs sit above Int.MaxValue
+      val base = if (idType == "long") 5000000000L else 0L
+      val edges = parts.zipWithIndex.flatMap { case (es, j) =>
+        es.map { case (a, b) => (base + 100L * j + a, base + 100L * j + b) } }
+      (edges, idType)
+    }
+    for (advisory <- Seq(None, Some("64"))) {
+      val prop = Prop.forAllNoShrink(graph) { case (edges, idType) =>
+        withAdvisory(advisory)(ccRows(edges, idType)) == driverCc(edges)
+      }
+      val res = Test.check(Test.Parameters.default
+        .withMinSuccessfulTests(9).withInitialSeed(Seed(17L)), prop)
+      assert(res.passed, s"advisory=$advisory: ${res.status}")
+    }
+  }
+
+  test("cc output keeps the input id type") {
+    import SparkSpec.spark.implicits._
+    import org.apache.spark.sql.types.{IntegerType, LongType}
+    val ints = graft.operators.Dedup.ccGroups(
+      Seq((1, 2), (2, 3)).toDF("doc_a", "doc_b"))
+    val longs = graft.operators.Dedup.ccGroups(
+      Seq((1L, 2L), (2L, 3L)).toDF("doc_a", "doc_b"))
+    assert(ints.schema("doc_id").dataType == IntegerType)
+    assert(ints.schema("keep_doc").dataType == IntegerType)
+    assert(longs.schema("doc_id").dataType == LongType)
+    assert(longs.schema("keep_doc").dataType == LongType)
+    assert(ints.schema("group_size").dataType == LongType)
+  }
+
+  test("cc: the 12-chain resolves in local contraction alone, with no label round, under a job ceiling") {
+    import SparkSpec.spark.implicits._
+    val pairs = ((1L to 11L).map(i => (i, i + 1)) :+ (20L, 21L))
+      .toDF("doc_a", "doc_b")
+    val starts = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val lst = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        starts.add(e.time)
+    }
+    spark.sparkContext.addSparkListener(lst)
+    val (t0, t1) = try {
+      val t0 = System.currentTimeMillis()
+      graft.operators.Dedup.ccGroups(pairs).collect()
+      val t1 = System.currentTimeMillis()
+      Thread.sleep(2000) // listener bus drains async
+      (t0, t1)
+    } finally spark.sparkContext.removeSparkListener(lst)
+    import scala.jdk.CollectionConverters._
+    val jobs = starts.asScala.count(t => t >= t0 && t <= t1)
+    info(s"12-chain: ${graft.operators.Dedup.lastCcRounds.get()} round(s), $jobs jobs")
+    assert(graft.operators.Dedup.lastCcRounds.get() == 0)
+    assert(jobs <= 12, s"$jobs jobs")
+  }
+
+  test("cc: a 256-node permuted-id chain across many contraction partitions converges fast and exactly") {
+    // the label loop's plan-size estimate must not compound across
+    // rounds: before it was rebuilt from measured rows, a 192-node
+    // chain never finished planning
+    val edges = permutedChain(256)
+    // digit count of every checkpointed round's planned size estimate
+    val estDigits = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val lst = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(fn: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        if (fn == "localCheckpoint")
+          estDigits.add(qe.optimizedPlan.stats.sizeInBytes.toString.length)
+      override def onFailure(fn: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(lst)
+    val (got, secs) = try {
+      val t0 = System.nanoTime()
+      val got = withAdvisory(Some("64"))(ccRows(edges, "long"))
+      val secs = (System.nanoTime() - t0) / 1e9
+      Thread.sleep(2000) // listener bus drains async
+      (got, secs)
+    } finally spark.listenerManager.unregister(lst)
+    val rounds = graft.operators.Dedup.lastCcRounds.get()
+    import scala.jdk.CollectionConverters._
+    val digits = estDigits.asScala.toSeq
+    info(f"256-chain: $rounds rounds, $secs%.1f s, estimate digits ${digits.mkString(",")}")
+    assert(got == driverCc(edges))
+    assert(rounds > 1, "the tiny advisory size leaves cross-partition rounds")
+    assert(digits.size == rounds)
+    // measured, not compounded: a KB-sized round plans as ≤ 10^20 bytes
+    assert(digits.max <= 20, digits.mkString(","))
+    assert(secs < 60.0, f"$secs%.1f s")
+  }
+
   test("d2 blind-doc diagnostic: boilerplate-only docs are reported, distinct docs are not") {
     import SparkSpec.spark.implicits._
     // 30 docs of identical boilerplate (every shingle df=30 > maxDf=8)
@@ -452,6 +617,40 @@ class DedupTextSpec extends SparkSpec {
     assert(kept >= 0.6 && kept <= 0.95, s"kept fraction $kept")
   }
 
+  test("t13: a failed bigram stream settles the concurrent vocabulary scan before the exception leaves") {
+    import SparkSpec.spark.implicits._
+    T13Probe.vocabRowsDone.set(0)
+    // text passes through a UDF that, inside the labelled vocabulary
+    // job only, is slow and counts the rows it finished; doc_id throws
+    // — the vocabulary scan never reads it, the bigram stream does
+    val slowText = udf { (s: String) =>
+      val job = org.apache.spark.TaskContext.get()
+        .getLocalProperty("spark.job.description")
+      if (job == "t13: vocabulary scan") {
+        Thread.sleep(1500); T13Probe.vocabRowsDone.incrementAndGet()
+      }
+      s
+    }
+    val failingId = udf { (i: Long) =>
+      if (i >= 0) throw new IllegalStateException("injected bigram failure")
+      i
+    }
+    // a range scan, not a local Seq: the UDFs must run in tasks
+    val words = Seq("alpha", "beta", "gamma", "delta", "epsilon", "zeta", "eta")
+    val docs = spark.range(0, 4, 1, 4)
+      .select(failingId(col("id")).as("doc_id"),
+        slowText(concat_ws(" ", (0 until 4).map(k =>
+          element_at(typedLit(words), (col("id") + k + 1).cast("int"))): _*))
+          .as("text"))
+    val e = intercept[Exception](
+      graft.operators.TextAnalysis.perplexityFrom(docs, "doc_id", "text"))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("injected bigram failure")),
+      e.toString)
+    // every vocabulary row was processed before the exception arrived
+    assert(T13Probe.vocabRowsDone.get() == 4)
+  }
+
   test("t15 shuffle-shard: exact cover, dense pos, balanced, seed-sensitive") {
     val rows = run("t15_shuffle_shard").collect()
     val docs = graft.Tables(spark, sf).documents.count()
@@ -700,4 +899,10 @@ class DedupTextSpec extends SparkSpec {
     assert(large.getAs[Double]("weight") <=
       large.getAs[Long]("n_tok").toDouble / totTok)
   }
+}
+
+/** Row counter the t13 failure spec's UDF reaches statically (a
+  * captured counter would be a deserialized copy inside each task). */
+object T13Probe {
+  val vocabRowsDone = new java.util.concurrent.atomic.AtomicInteger(0)
 }

@@ -619,6 +619,28 @@ class GraftApiSpec extends SparkSpec {
     assert(got.tail.sameElements(want.take(9)))
   }
 
+  test("trainCodebook leaves a frame its caller cached in the cache, " +
+      "and persists nothing of an uncached one past the call") {
+    import org.apache.spark.storage.StorageLevel
+    val spark = SparkSpec.spark
+    val base = spark.read.parquet(s"$sf/embeddings.parquet")
+      .select(col("vec_id"),
+        col("embedding").cast("array<double>").as("v"))
+    val owned = base.filter(col("vec_id") % 2 === 0).cache()
+    try {
+      owned.count()
+      val cb = graft.operators.Ann.trainCodebook(owned, 8)
+      assert(owned.storageLevel != StorageLevel.NONE)
+      // still served from the caller's cache, not re-planned
+      assert(owned.queryExecution.withCachedData.toString
+        .contains("InMemoryRelation"))
+      val loose = base.filter(col("vec_id") % 2 === 1)
+      graft.operators.Ann.trainCodebook(loose, 8)
+      assert(loose.storageLevel == StorageLevel.NONE)
+      assert(cb.values.nonEmpty)
+    } finally owned.unpersist()
+  }
+
   test("trainCodebookSampled: at-or-under the target it IS full " +
       "training; past it a deterministic sample still serves with recall") {
     val spark = SparkSpec.spark
